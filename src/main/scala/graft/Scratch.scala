@@ -31,30 +31,31 @@ object Scratch {
     if (args(0) == "ttlprobe") { ttlProbe(spark); spark.stop(); return }
     if (args(0) == "streamphases") {
       // streamphases <query> <sfDir> — per-micro-batch durationMs
-      // breakdown for a replay row, to see where replay wall time goes
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryStartedEvent): Unit =
-          println(s"STARTED run=${e.runId}")
-        override def onQueryProgress(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          val dur = p.durationMs
-          println(s"BATCH ${p.batchId} rows=${p.numInputRows} " +
-            s"trigger=${dur.get("triggerExecution")} " +
-            s"addBatch=${dur.get("addBatch")} " +
-            s"getBatch=${dur.get("getBatch")} " +
-            s"planning=${dur.get("queryPlanning")} " +
-            s"walCommit=${dur.get("walCommit")} " +
-            s"commitOffsets=${dur.get("commitOffsets")} " +
-            s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")} " +
-            s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).mkString(",")}")
+      // breakdown for a replay row, to see where replay wall time goes.
+      // Replays run in a session of their own, so this listens on the
+      // SparkContext bus, which carries every session's query events.
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case st: QueryStartedEvent => println(s"STARTED run=${st.runId}")
+          case ev: QueryProgressEvent =>
+            val p = ev.progress
+            val dur = p.durationMs
+            println(s"BATCH ${p.batchId} rows=${p.numInputRows} " +
+              s"trigger=${dur.get("triggerExecution")} " +
+              s"addBatch=${dur.get("addBatch")} " +
+              s"getBatch=${dur.get("getBatch")} " +
+              s"planning=${dur.get("queryPlanning")} " +
+              s"walCommit=${dur.get("walCommit")} " +
+              s"commitOffsets=${dur.get("commitOffsets")} " +
+              s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")} " +
+              s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).mkString(",")}")
+          case t: QueryTerminatedEvent => println(s"TERMINATED run=${t.runId}")
+          case _ => ()
         }
-        override def onQueryTerminated(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryTerminatedEvent): Unit =
-          println(s"TERMINATED run=${e.runId}")
       }
-      spark.streams.addListener(listener)
+      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(args(1))(spark, args(2))
       val t1 = System.nanoTime()

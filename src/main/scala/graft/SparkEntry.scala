@@ -2077,7 +2077,7 @@ object SparkEntry {
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2),
-          restartAfterBatch = Some(1))
+          restartAfterBatches = Seq(1))
         .select(col("trip_id"), col("ts"), col("ewma"))
     }),
 
@@ -2215,7 +2215,7 @@ object SparkEntry {
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2),
-          restartAfterBatch = Some(1)) { st =>
+          restartAfterBatches = Seq(1)) { st =>
           val l = st.where(col("event_type") === "click")
             .select(col("event_id").as("l_event_id"), col("user_id"),
               col("ts").as("l_ts"))
@@ -2326,8 +2326,7 @@ object SparkEntry {
           col("event_time") >= cut1 && col("event_time") < cut2,
           col("event_time") >= cut2 && col("event_time") < cutS,
           col("event_time") >= cutS && col("event_time") < cutB,
-          col("event_time") >= cutB),
-          useRocksDb = true) { st =>
+          col("event_time") >= cutB)) { st =>
           graft.streaming.StreamingAnalytics.sessionizeStreamTws(
             st.as[graft.streaming.StreamingAnalytics.SEvent],
             gapSeconds = 21600L).toDF()
@@ -2377,8 +2376,7 @@ object SparkEntry {
           col("event_time") >= cut2 && col("event_time") < cutS,
           col("event_time") >= cutS && col("event_time") < cutB,
           col("event_time") >= cutB),
-          useRocksDb = true,
-          restartAfterBatch = Some(2)) { st =>
+          restartAfterBatches = Seq(2)) { st =>
           graft.streaming.StreamingAnalytics.sessionizeStreamTws(
             st.as[graft.streaming.StreamingAnalytics.SEvent],
             gapSeconds = 21600L).toDF()
@@ -2416,17 +2414,16 @@ object SparkEntry {
       val cut2 = lit("2024-01-21").cast("timestamp")
       val cutS = lit("2024-06-01").cast("timestamp")
       val cutB = lit("2024-12-15").cast("timestamp")
+      // ProcessingTime-mode tws never terminates under AvailableNow
+      // (shouldRunAnotherBatch is unconditionally true in that time
+      // mode) — the harness sees the time mode in the plan, drains the
+      // staged rows and stops
       graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2 && col("ts") < cutS,
           col("ts") >= cutS && col("ts") < cutB,
-          col("ts") >= cutB),
-          useRocksDb = true,
-          // ProcessingTime-mode tws never terminates under AvailableNow
-          // (shouldRunAnotherBatch is unconditionally true in that time
-          // mode) — the harness drains the staged rows and stops
-          processingTimeDrain = true) { st =>
+          col("ts") >= cutB)) { st =>
           import s.implicits._
           graft.streaming.StreamingAnalytics.dimAggStream(
             st.select("user_id", "tse", "event_type", "vu")
@@ -2472,9 +2469,7 @@ object SparkEntry {
           col("ts") >= cut2 && col("ts") < cutS,
           col("ts") >= cutS && col("ts") < cutB,
           col("ts") >= cutB),
-          useRocksDb = true,
-          processingTimeDrain = true,
-          restartAfterBatch = Some(2)) { st =>
+          restartAfterBatches = Seq(2)) { st =>
           import s.implicits._
           graft.streaming.StreamingAnalytics.dimAggStream(
             st.select("user_id", "tse", "event_type", "vu")
@@ -2518,7 +2513,7 @@ object SparkEntry {
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2), updateMode = true,
-          restartAfterBatch = Some(1),
+          restartAfterBatches = Seq(1),
           updateSink = Some { (df, _, out) =>
             graft.streaming.RealtimeStream.mergeBatchPartitioned(
               df.withColumn("bucket", col("user_id") % 16L),

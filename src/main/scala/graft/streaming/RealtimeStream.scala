@@ -263,13 +263,21 @@ object RealtimeStream {
     * [[graft.pipelines.Realtime.microBatch]] against the current snapshot,
     * then swap — E1 end to end per batch. */
   def feedBatch(payloads: Dataset[Array[Byte]], targetPath: String,
-                weatherJson: Option[String]): Unit = {
-    implicit val spark: SparkSession = payloads.sparkSession
+                weatherJson: Option[String]): Unit =
+    swapFeed(payloads.toDF("content"), targetPath, weatherJson)
+
+  /** [[feedBatch]] over landed payloads: a binaryFile batch's paths
+    * order its snapshots (see
+    * [[graft.pipelines.Realtime.latestObservations]]). */
+  private def swapFeed(landed: DataFrame, targetPath: String,
+                       weatherJson: Option[String]): Unit = {
+    implicit val spark: SparkSession = landed.sparkSession
     val fs = new Path(targetPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val target = snapshotPath(fs, targetPath)
       .map(p => spark.read.parquet(p.toString))
-    val merged = graft.pipelines.Realtime.microBatch(payloads, weatherJson, target)
+    val merged = graft.pipelines.Realtime
+      .microBatchLanded(landed, weatherJson, target)
     merged.write.mode("overwrite").parquet(targetPath + ".next")
     promote(fs, targetPath)
   }
@@ -282,17 +290,17 @@ object RealtimeStream {
     * absent land in the NULL partition, which the pruned read covers
     * with an explicit isNull disjunct. */
   def feedBatchPartitioned(payloads: Dataset[Array[Byte]], targetPath: String,
-                           weatherJson: Option[String]): Unit = {
-    implicit val spark: SparkSession = payloads.sparkSession
-    val keys = Seq("trip_id", "start_date", "stop_sequence", "stop_id")
-    val obs = graft.pipelines.Realtime.observations(payloads, weatherJson)
-      .withColumn("__seq", org.apache.spark.sql.functions
-        .monotonically_increasing_id())
-    val latest = Upsert.latestPerKey(obs, keys, "__seq").drop("__seq")
-    mergePartitioned(latest, targetPath, keys,
+                           weatherJson: Option[String]): Unit =
+    mergeFeed(payloads.toDF("content"), targetPath, weatherJson)
+
+  /** [[feedBatchPartitioned]] over landed payloads, as [[swapFeed]]. */
+  private def mergeFeed(landed: DataFrame, targetPath: String,
+                        weatherJson: Option[String]): Unit =
+    mergePartitioned(graft.pipelines.Realtime.latestObservations(landed,
+        weatherJson)(landed.sparkSession), targetPath,
+      graft.pipelines.Realtime.keys,
       compareCols = Seq("arrival_time", "departure_time"),
       partitionCol = "start_date", createdCol = Some("created_at"))
-  }
 
   /** The reference's cron loop as an actual stream: watch a directory of
     * fetched `.pb` feed files (the S1 fetcher's drop zone — or any
@@ -308,7 +316,6 @@ object RealtimeStream {
                       trigger: Trigger = Trigger.ProcessingTime("1 minute"),
                       partitionSnapshot: Boolean = false)
       : StreamingQuery = {
-    import spark.implicits._
     // streaming sources need the schema up front; this is binaryFile's
     // fixed schema
     val payloads = spark.readStream.format("binaryFile")
@@ -318,10 +325,8 @@ object RealtimeStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val contents = batch.select("content").as[Array[Byte]]
-        if (partitionSnapshot)
-          feedBatchPartitioned(contents, targetPath, weatherJson())
-        else feedBatch(contents, targetPath, weatherJson())
+        if (partitionSnapshot) mergeFeed(batch, targetPath, weatherJson())
+        else swapFeed(batch, targetPath, weatherJson())
       }
       .start()
   }

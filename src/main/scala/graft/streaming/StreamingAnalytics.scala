@@ -484,36 +484,15 @@ object StreamingAnalytics {
   def replayEwmaTws(spark: org.apache.spark.sql.SparkSession, obs: DataFrame,
                     baseDir: String,
                     batchPreds: Seq[org.apache.spark.sql.Column],
-                    restartAfterBatch: Option[Int] = None,
+                    restartAfterBatches: Seq[Int] = Nil,
                     onRestartInfo: RestartInfo => Unit = _ => ()): DataFrame =
-    replayStream(spark, obs, baseDir, batchPreds, useRocksDb = true,
-      restartAfterBatch = restartAfterBatch, onRestartInfo = onRestartInfo) {
-      stream =>
+    replayStream(spark, obs, baseDir, batchPreds,
+      restartAfterBatches = restartAfterBatches,
+      onRestartInfo = onRestartInfo) { stream =>
         import spark.implicits._
         ewmaStreamTws(stream.as[Obs]).toDF()
     }
 
-  /** The generic deterministic-replay harness behind [[replayEwmaTws]]
-    * (and the q250 stream-stream join row): materialize `input` into one
-    * parquet file per `batchPreds` predicate with modification times
-    * pinned to replay order, serve them as micro-batches through the
-    * file source, run `build`'s streaming transform into a parquet sink
-    * under `Trigger.AvailableNow`, and read the appended rows back as a
-    * batch frame. `useRocksDb` switches the state-store provider for the
-    * run (and restores the session conf after): transformWithState
-    * REQUIRES RocksDB, but for the other stateful operators the replay
-    * keeps the session default — at replay sizes the native store's
-    * per-partition spin-up (numShufflePartitions stores per stateful
-    * operator per micro-batch) dominates wall time, and the provider
-    * choice is deployment config, not operator semantics. `updateMode`
-    * runs the query in Update output mode through a foreachBatch
-    * parquet-append sink (the parquet sink itself is append-only), for
-    * transforms like [[funnelStagesStream]] that re-emit a key's row
-    * when it changes. The foreachBatch append is NOT idempotent under
-    * batch retry — fine here (fresh checkpoint + out dir every run, one
-    * local driver, deterministic inputs), but a production update-mode
-    * sink needs the batchId-keyed overwrite discipline
-    * [[RealtimeStream.mergeBatchPartitioned]] implements. */
   /** What a [[replayStream]] checkpoint-restart actually did — evidence
     * for the exactly-once claim: the SAME streaming query (one `id`,
     * restored from the checkpoint) ran as TWO runs (distinct `runId`s),
@@ -524,74 +503,67 @@ object StreamingAnalytics {
                                secondRunId: java.util.UUID,
                                commitsAfterFirst: Int, commitsTotal: Int)
 
+  /** The generic deterministic-replay harness behind [[replayEwmaTws]]
+    * (and the q250 stream-stream join row): materialize `input` into one
+    * parquet file per `batchPreds` predicate with modification times
+    * pinned to replay order, serve them as micro-batches through the
+    * file source, run `build`'s streaming transform into a parquet sink,
+    * and read the appended rows back as a batch frame.
+    *
+    * The run mode comes from `build`'s plan, not from the caller:
+    *   - a `transformWithState` node selects the RocksDB state-store
+    *     provider, which that API requires; every other stateful
+    *     operator keeps the session default — at replay sizes the native
+    *     store's per-partition spin-up dominates wall time, and the
+    *     provider is deployment config, not operator semantics;
+    *   - a `transformWithState` in `TimeMode.ProcessingTime` (the
+    *     TTL-carrying machines) reports shouldRunAnotherBatch=true
+    *     unconditionally, so `Trigger.AvailableNow` would never
+    *     terminate; such a replay paces batches with a short
+    *     ProcessingTime trigger and stops once every staged row is
+    *     committed (drain mode, below).
+    * Each replay runs in a session of its own, started from the caller's
+    * modifiable conf, so its state-store provider and shuffle-partition
+    * count never leak into queries sharing the caller's session.
+    *
+    * `updateMode` runs the query in Update output mode through a
+    * foreachBatch parquet-append sink (the parquet sink itself is
+    * append-only), for transforms like [[funnelStagesStream]] that
+    * re-emit a key's row when it changes. That append is NOT idempotent
+    * under batch retry — fine here (fresh checkpoint + out dir every
+    * run, one local driver, deterministic inputs). `updateSink` replaces
+    * it with a caller-supplied idempotent sink — (batch frame, batchId,
+    * out path) — e.g. RealtimeStream.mergeBatchPartitioned, whose
+    * latest-per-key + change-predicated merge makes a replayed batch a
+    * no-op; q266 runs the funnel through it ACROSS a checkpoint restart.
+    *
+    * `restartAfterBatches` kills and resumes the query from its
+    * checkpoint after each listed batch (batches >= N wait in a pending
+    * tranche until the run before has drained and committed 0..N-1), so
+    * a spec can pin e.g. a timer registered in batch 0 firing exactly
+    * once through two successive restores. `onRestartInfo` fires once
+    * per boundary; `beforeRestart` runs between each query stop and the
+    * next release — the window where a spec can let wall-clock state (a
+    * TTL written before the kill) expire before the resumed run sees it.
+    * Every run is bounded: one that has not finished within 180 s is
+    * stopped and fails the replay. */
   def replayStream(spark: org.apache.spark.sql.SparkSession, input: DataFrame,
                    baseDir: String,
                    batchPreds: Seq[org.apache.spark.sql.Column],
-                   useRocksDb: Boolean = false,
                    updateMode: Boolean = false,
-                   restartAfterBatch: Option[Int] = None,
-                   onRestartInfo: RestartInfo => Unit = _ => (),
-                   processingTimeDrain: Boolean = false,
                    updateSink: Option[(DataFrame, Long, String) => Unit] =
                      None,
-                   // runs between each query stop and the next pending
-                   // release — the window where a spec can let wall-clock
-                   // state (a TTL written before the kill) expire before
-                   // the resumed run observes it
-                   beforeRestart: () => Unit = () => (),
-                   // additional kill points (VERDICT r15 item 7): the
-                   // backlog is staged into one tranche per restart and
-                   // the query is killed+resumed at EVERY point, so a
-                   // spec can pin e.g. a timer registered in batch 0
-                   // firing exactly once through TWO successive
-                   // restores. Merged with restartAfterBatch;
-                   // onRestartInfo fires once per boundary.
-                   restartAfterBatches: Seq[Int] = Nil)
+                   restartAfterBatches: Seq[Int] = Nil,
+                   onRestartInfo: RestartInfo => Unit = _ => (),
+                   beforeRestart: () => Unit = () => ())
                   (build: DataFrame => DataFrame): DataFrame = {
-    // Phase-wall diagnostic (optimization measurement surface): with
-    // SPARK_GRAFT_REPLAY_PHASES set, each harness phase prints its wall
-    // seconds to stderr — stage (slice+write the backlog), runN (the
-    // N-th streaming query incl. all its micro-batches), release (a
-    // pending tranche move). Reading the sink back is the caller's.
-    val phaseT0 = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    def phase(name: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_REPLAY_PHASES")) {
-        val now = System.nanoTime()
-        Console.err.println(f"REPLAY_PHASE $name ${(now - phaseT0.get) / 1e9}%.3f")
-        phaseT0.set(now)
-      }
-    // `updateSink` replaces the update-mode foreachBatch body with a
-    // caller-supplied idempotent sink — (batch frame, batchId, out path)
-    // — e.g. RealtimeStream.mergeBatchPartitioned, whose
-    // latest-per-key + change-predicated merge makes a replayed batch a
-    // no-op. The default parquet append is NOT idempotent under batch
-    // retry (documented below); q266 runs the funnel through the merge
-    // sink ACROSS a checkpoint restart to pin the Update-path
-    // exactly-once claim the append variant can only scope away.
     require(updateSink.isEmpty || updateMode,
       "updateSink requires updateMode")
-    // ProcessingTime-mode stateful operators (the TTL-carrying ones —
-    // TTL REQUIRES TimeMode.ProcessingTime) report
-    // shouldRunAnotherBatch=true unconditionally (processing time always
-    // advances, so a timer/TTL could always fire), which means
-    // Trigger.AvailableNow NEVER terminates on them — the engine keeps
-    // scheduling no-data batches forever. `processingTimeDrain` is the
-    // replay contract for that mode: pace batches with a short
-    // ProcessingTime trigger, count COMMITTED input rows through a
-    // listener, and stop() once every staged row is committed. No-data
-    // batches emit nothing (no input rows → no handleInputRows; TTL
-    // cleanup emits nothing), and the parquet sink's metadata log hides
-    // any uncommitted trailing batch — so the drained sink is exactly as
-    // deterministic as the AvailableNow path. Composed with
-    // `restartAfterBatch` (q269), each run drains to ITS OWN committed-
-    // row target: the first run to the rows staged in the released
-    // batches (only those files exist, so it can never overshoot), the
-    // second — with a fresh listener, counting only its own commits —
-    // to the rows in the pending remainder.
     import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.streaming.{StreamingQuery,
+      StreamingQueryListener, TimeMode, Trigger}
     val fs = new Path(baseDir).getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(baseDir), true) // fresh replay per run
-    phase("delete")
     val srcDir = new Path(s"$baseDir/src")
     // Checkpoint-restart (VERDICT r13 item 3): batches >= N stage in
     // `pending` and move into `src` only AFTER the first query has
@@ -606,11 +578,10 @@ object StreamingAnalytics {
     // bit-identical final sink.
     val pendingDir = new Path(s"$baseDir/pending")
     fs.mkdirs(srcDir)
-    val restarts = (restartAfterBatch.toSeq ++ restartAfterBatches)
-      .distinct.sorted
+    val restarts = restartAfterBatches.distinct.sorted
     restarts.foreach { n =>
       require(n >= 1 && n < batchPreds.length,
-        s"restartAfterBatch must split the backlog: got $n of ${batchPreds.length} batches")
+        s"restartAfterBatches must split the backlog: got $n of ${batchPreds.length} batches")
     }
     // one pending tranche per restart point: batch i waits in tranche
     // k = #(restart points <= i) until the k-th resume releases it
@@ -651,7 +622,6 @@ object StreamingAnalytics {
       // (measured: 4.0 s → 1.5 s staging on q257's 200k-row backlog).
       .repartition(batchPreds.length, col(bName))
       .write.mode("overwrite").partitionBy(bName).parquet(stageAll)
-    phase("stagewrite")
     val metrics = obs.get
     require(metrics("pred_matches") == metrics("rows_staged"),
       s"replayStream: batchPreds overlap (${metrics("pred_matches")} " +
@@ -682,30 +652,33 @@ object StreamingAnalytics {
       fs.delete(new Path(s"$baseDir/tmp$i"), true)
     }
     fs.delete(new Path(stageAll), true)
-    phase("stage")
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val replay = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) replay.conf.set(k, v)
+    }
+    def query(): DataFrame = build(replay.readStream
+      .schema(input.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(srcDir.toString))
+    val firstQuery = query()
+    val twsTimeMode = firstQuery.queryExecution.logical.collectFirst {
+      case t: org.apache.spark.sql.catalyst.plans.logical.TransformWithState =>
+        t.timeMode
+    }
+    val drain = twsTimeMode.contains(TimeMode.ProcessingTime())
     // Replay inputs are KB-sized, but every stateful operator opens one
     // state store PER SHUFFLE PARTITION per micro-batch (x2 for
     // stream-stream join sides) — at the session's 32 partitions that
     // spin-up, not work, dominated the replay rows' wall time (~24% of
     // the whole r13 bench). Results are partition-count-independent
     // (hash-checked), so the replay derives its state-partition count
-    // from the STAGED BACKLOG SIZE (guide §2: partitioning sized to the
-    // data, not a constant tuned for one box) — one partition per 64 MB
-    // of staged input, floored at 1 and capped at the session's own
-    // setting — and restores the session conf after. Every bench backlog
-    // is ≤ a few MB, so replays run single-partition here (measured on
-    // the 5 heaviest replay rows: 46.2 s → 41 s vs the previous fixed 4
-    // — per-batch state-store commit/spin-up is per partition, and a
-    // 13k-row join state does not need four stores); a 10 GB backlog
-    // would get ~160 partitions up to the session cap. Production
-    // sizing is the opposite call entirely: shuffle partitions there
-    // are set to the cluster's parallelism, and state store instances
-    // amortize across long-lived micro-batches.
+    // from the STAGED BACKLOG, capped at the caller's own setting.
+    // Production sizing is the opposite call entirely: shuffle
+    // partitions there are set to the cluster's parallelism, and state
+    // store instances amortize across long-lived micro-batches.
     // `spark.graft.replay.statePartitions` overrides the derivation.
     val partKey = "spark.sql.shuffle.partitions"
-    val savedProv = spark.conf.getOption(provKey)
-    val savedPart = spark.conf.getOption(partKey)
+    val callerPart = spark.conf.getOption(partKey)
     val stagedBytes =
       (fs.listStatus(srcDir).toSeq ++
         restarts.indices.flatMap(k =>
@@ -714,9 +687,9 @@ object StreamingAnalytics {
     val statePartitions = spark.conf
       .getOption("spark.graft.replay.statePartitions").map(_.toInt)
       .getOrElse {
-        val cap = savedPart.flatMap(_.toIntOption)
+        val cap = callerPart.flatMap(_.toIntOption)
           .getOrElse(spark.sparkContext.defaultParallelism)
-        if (useRocksDb)
+        if (twsTimeMode.isDefined)
           // transformWithState rows are CPU-bound in handleInputRows
           // (per-key JVM state machines), so parallelism tracks ROWS
           // (~50k rows/task); measured: forcing these to 1 partition
@@ -730,19 +703,33 @@ object StreamingAnalytics {
           // per-partition DATA reaches shuffle-sized chunks (~64 MB)
           math.max(1, math.min(cap, (stagedBytes >> 26).toInt))
       }
-    if (useRocksDb)
-      spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-        ".state.RocksDBStateStoreProvider")
-    spark.conf.set(partKey, statePartitions.toString)
+    if (twsTimeMode.isDefined)
+      replay.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state" +
+          ".RocksDBStateStoreProvider")
+    replay.conf.set(partKey, statePartitions.toString)
+    // Drain mode counts COMMITTED input rows per run (progress events
+    // post after commit). Streaming-query listeners are per session, so
+    // this listens on the SparkContext bus, which carries every
+    // session's progress events; keying by runId keeps other queries'
+    // batches and earlier runs' late events out of the count.
+    val committed =
+      scala.collection.concurrent.TrieMap.empty[(java.util.UUID, Long), Long]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          committed.put((p.progress.runId, p.progress.batchId),
+            p.progress.numInputRows): Unit
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
-      def runOnce(drainTarget: Long): org.apache.spark.sql.streaming.StreamingQuery = {
-        val stream = spark.readStream
-          .schema(input.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$baseDir/src")
+      def runOnce(plan: DataFrame, drainTarget: Long): StreamingQuery = {
         val writer =
           if (updateMode)
-            build(stream).writeStream
+            plan.writeStream
               .outputMode("update")
               .foreachBatch { (df: DataFrame, bid: Long) =>
                 updateSink match {
@@ -750,7 +737,7 @@ object StreamingAnalytics {
                     // a user sink (q266's partitioned merge, q267's
                     // admission gate) is BATCH work — joins and
                     // aggregations sized by the batch, not stream-state
-                    // machinery — so it plans at the session's own
+                    // machinery — so it plans at the caller's own
                     // parallelism, not the replay's state-partition
                     // count (measured: the q267 gate at 1 shuffle
                     // partition lost 2.5 s/run). The stream side is
@@ -758,15 +745,13 @@ object StreamingAnalytics {
                     // pinned by the checkpoint's recorded value at
                     // query start, not by the conf mid-run.
                     // The swap must happen on df.sparkSession — the
-                    // stream's cloneSession(), which captured the
-                    // replay's derived statePartitions at query start
-                    // and is the session both sinks plan through (r16
-                    // ADVICE: swapping the OUTER session's conf here was
-                    // a no-op and the sinks actually ran at the
-                    // state-partition count).
+                    // stream's own clone of the replay session, which
+                    // both sinks plan through (r16 ADVICE: swapping an
+                    // outer session's conf here was a no-op and the
+                    // sinks actually ran at the state-partition count).
                     val sess = df.sparkSession
                     val inner = sess.conf.get(partKey)
-                    savedPart.fold(sess.conf.unset(partKey))(
+                    callerPart.fold(sess.conf.unset(partKey))(
                       sess.conf.set(partKey, _))
                     try sink(df, bid, s"$baseDir/out")
                     finally sess.conf.set(partKey, inner)
@@ -775,63 +760,44 @@ object StreamingAnalytics {
                 }
               }
           else
-            build(stream).writeStream
+            plan.writeStream
               .format("parquet")
               .option("path", s"$baseDir/out")
               .outputMode("append")
         val withCkpt = writer.option("checkpointLocation", s"$baseDir/ckpt")
-        if (!processingTimeDrain) {
-          val q = withCkpt
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+        val timeoutMs = 180000L
+        def timedOut(q: StreamingQuery): Nothing = {
+          q.stop()
+          sys.error(s"replayStream: run ${q.runId} did not finish " +
+            s"within $timeoutMs ms")
+        }
+        if (!drain) {
+          val q = withCkpt.trigger(Trigger.AvailableNow()).start()
+          if (!q.awaitTermination(timeoutMs)) timedOut(q)
           q
         } else {
-          // drain-then-stop: AvailableNow cannot terminate a
-          // ProcessingTime-mode stateful query (see the parameter note),
-          // so pace batches and stop once the listener has seen every
-          // staged row COMMITTED (progress events post after commit).
-          // Keyed by (query id, batchId): suites share one session, so
-          // other queries' progress events must not count. Empty staged
-          // files need no special case — they contribute no rows and no
-          // emissions, so the sink is complete once all NONEMPTY rows
-          // are committed, whatever order the empties drain in.
-          val committed =
-            scala.collection.concurrent.TrieMap
-              .empty[(java.util.UUID, Long), Long]
-          val listener =
-            new org.apache.spark.sql.streaming.StreamingQueryListener {
-              override def onQueryStarted(e: org.apache.spark.sql.streaming
-                  .StreamingQueryListener.QueryStartedEvent): Unit = ()
-              override def onQueryProgress(e: org.apache.spark.sql.streaming
-                  .StreamingQueryListener.QueryProgressEvent): Unit =
-                committed.put((e.progress.id, e.progress.batchId),
-                  e.progress.numInputRows): Unit
-              override def onQueryTerminated(e: org.apache.spark.sql
-                  .streaming.StreamingQueryListener
-                  .QueryTerminatedEvent): Unit = ()
-            }
-          spark.streams.addListener(listener)
-          try {
-            val q = withCkpt
-              .trigger(org.apache.spark.sql.streaming.Trigger
-                .ProcessingTime("100 milliseconds"))
-              .start()
-            val target = drainTarget
-            val deadline = System.nanoTime() + 180L * 1000000000L
-            def drained(): Boolean = committed.iterator
-              .collect { case ((id, _), n) if id == q.id => n }
-              .sum >= target
-            while (!drained()) {
-              q.exception.foreach(throw _)
-              if (System.nanoTime() > deadline)
-                { q.stop(); sys.error("replayStream: drain timed out") }
-              Thread.sleep(50L)
-            }
-            q.stop()
-            q.awaitTermination()
-            q
-          } finally spark.streams.removeListener(listener)
+          // drain-then-stop: empty staged files need no special case —
+          // they contribute no rows and no emissions, so the sink is
+          // complete once all NONEMPTY rows are committed, whatever
+          // order the empties drain in; no-data batches emit nothing,
+          // and the parquet sink's metadata log hides any uncommitted
+          // trailing batch, so the drained sink is exactly as
+          // deterministic as the AvailableNow path
+          val q = withCkpt
+            .trigger(Trigger.ProcessingTime("100 milliseconds"))
+            .start()
+          val deadline = System.nanoTime() + timeoutMs * 1000000L
+          def drained(): Boolean = committed.iterator
+            .collect { case ((run, _), n) if run == q.runId => n }
+            .sum >= drainTarget
+          while (!drained()) {
+            q.exception.foreach(throw _)
+            if (System.nanoTime() > deadline) timedOut(q)
+            Thread.sleep(50L)
+          }
+          q.stop()
+          q.awaitTermination()
+          q
         }
       }
       def commits(): Int =
@@ -841,27 +807,22 @@ object StreamingAnalytics {
       // drain targets per run (drain mode only): each run owes exactly
       // the rows in the files released TO it — run 0 what src holds,
       // run k its tranche — counted from the actual staged files, not
-      // re-derived from the predicate split; each run's fresh listener
-      // counts only its own commits
+      // re-derived from the predicate split
       def rowsIn(dir: Path): Long = {
         val files = fs.listStatus(dir).map(_.getPath)
           .filter(_.getName.endsWith(".parquet")).map(_.toString)
         if (files.isEmpty) 0L
         else spark.read.schema(input.schema).parquet(files: _*).count()
       }
-      val firstTarget =
-        if (processingTimeDrain && restarts.nonEmpty) rowsIn(srcDir)
-        else totalStaged
-      var prev = runOnce(firstTarget)
-      phase("run0")
+      var prev = runOnce(firstQuery,
+        if (drain && restarts.nonEmpty) rowsIn(srcDir) else totalStaged)
       restarts.indices.foreach { k =>
         val beforeKill = commits()
         beforeRestart()
         // release tranche k+1, pinned mod-times intact, and resume
         // from the checkpoint
         val tdir = new Path(pendingDir, s"t${k + 1}")
-        val target =
-          if (processingTimeDrain) rowsIn(tdir) else totalStaged
+        val target = if (drain) rowsIn(tdir) else totalStaged
         fs.listStatus(tdir).foreach { st =>
           val t = st.getModificationTime
           val dst = new Path(srcDir, st.getPath.getName)
@@ -869,19 +830,13 @@ object StreamingAnalytics {
             sys.error(s"replayStream: pending release failed for ${st.getPath}")
           fs.setTimes(dst, t, -1)
         }
-        val next = runOnce(target)
-        phase(s"run${k + 1}")
+        val next = runOnce(query(), target)
         onRestartInfo(RestartInfo(prev.id, prev.runId, next.runId,
           beforeKill, commits()))
         prev = next
       }
-    } finally {
-      savedProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
-      savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
-    }
-    val out = spark.read.parquet(s"$baseDir/out")
-    phase("readback")
-    out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    spark.read.parquet(s"$baseDir/out")
   }
 
   /** One funnel event for [[funnelStagesStream]]: epoch seconds. */

@@ -45,6 +45,49 @@ class RealtimeStreamSpec extends SparkSpec {
     assert(snap === Map(1L -> 2000L, 2L -> 3000L))
   }
 
+  test("one micro-batch of several snapshots keeps landing order: the " +
+    "later-named file's prediction wins whichever file is larger, on both " +
+    "snapshot paths") {
+    import graft.gtfs._
+    // the repeated key is stop 1; the larger file pads with other stops.
+    // Spark packs a batch's files largest first, so a dedup by row id
+    // alone lets whichever snapshot is smaller win
+    def snapshot(arr: Long, padStops: Int): Array[Byte] =
+      Rt.encode(FeedMessage(FeedHeader("2.0", Some(arr)),
+        (1 to 1 + padStops).map(seq => FeedEntity(s"e$seq", None,
+          Some(TripUpdate(
+            TripDescriptor(Some("T1"), None, Some("20240601"), None),
+            Seq(StopTimeUpdate(Some(seq),
+              Some(StopTimeEvent(None, Some(arr), None)), None, Some("10"))),
+            None, None))))))
+    val now = System.currentTimeMillis()
+    for (partitioned <- Seq(false, true); olderLarger <- Seq(true, false)) {
+      val base = Paths.get("target", "test_feedorder")
+      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+      val src = base.resolve("src"); Files.createDirectories(src)
+      val tgt = base.resolve("tgt").toString
+      // FetchLoop's names; the modification times run against them, as
+      // when a backlog is written by parallel landers — the name decides
+      val older = Files.write(src.resolve("feed_1700000000000_1.pb"),
+        snapshot(1000L, if (olderLarger) 300 else 0))
+      val newer = Files.write(src.resolve("feed_1700000060000_2.pb"),
+        snapshot(2000L, if (olderLarger) 0 else 300))
+      Files.setLastModifiedTime(older,
+        java.nio.file.attribute.FileTime.fromMillis(now - 30000L))
+      Files.setLastModifiedTime(newer,
+        java.nio.file.attribute.FileTime.fromMillis(now - 60000L))
+      val q = RealtimeStream.startFeedStream(spark, src.toString, tgt,
+        base.resolve("chk").toString, weatherJson = () => None,
+        trigger = Trigger.AvailableNow(), partitionSnapshot = partitioned)
+      q.awaitTermination()
+      val stop1 = spark.read.parquet(tgt).where("stop_sequence = 1")
+        .collect().map(_.getAs[java.sql.Timestamp]("arrival_time")
+          .getTime / 1000).toSeq
+      assert(stop1 === Seq(2000L),
+        s"partitioned=$partitioned olderLarger=$olderLarger")
+    }
+  }
+
   test("snapshot swap is crash-recoverable: a crash between promote's two " +
     "renames leaves .old readable and the next merge heals it") {
     import org.apache.hadoop.fs.Path
